@@ -18,10 +18,20 @@ Scoring semantics (mirrored exactly by the oracle):
   with ≥1 phrase match; score = idf(df_phrase)·tfn(tf_phrase, dl)
 - top-k: ORDER BY score DESC, doc_id ASC LIMIT k  (deterministic ties)
 
-Scale shape: dictionary stats join is broadcast; per-(doc,term) scores
-aggregate map-side; top-k is a TakeOrdered (no global sort
-materialization). Block-max metadata (max_tf per block) gives an upper
-score bound per block for WAND-style pruning — see `wand_candidates`.
+Scale shape: a flat query (WORD / OR of WORDs) whose blocks to decode
+hold at most LOCAL_FAST_MAX_OCC occurrences is scored on the driver
+(`score_blocks_local`): pyarrow reads just those blocks' payloads,
+numpy decodes them to per-doc tf and scores them against the handle's
+doc-length vector, and the top-k returns as a local relation — no Spark
+job. Both the exhaustive route and each WAND decode pass use it. It
+stops applying past either driver budget: more than
+LOCAL_FAST_MAX_OCC occurrences in the pass (a hot term's 32-block WAND
+seed), or more than LOCAL_META_MAX_BLOCKS committed docs (the
+doc-length vector). Then the Spark scorer runs: the dictionary stats
+join is broadcast; per-(doc,term) scores aggregate map-side; top-k is
+a TakeOrdered (no global sort materialization). Block-max metadata
+gives an upper score bound per block for WAND pruning — see
+`rank_terms_wand`.
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ from __future__ import annotations
 import os
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -343,14 +354,27 @@ def rank_query(
 ) -> DataFrame:
     """Deterministic BM25 top-k: (doc_id, score).
 
-    Flat term queries (WORD / OR-of-distinct-WORDs) on a single-field
-    blocks-mode index of ≥ WAND_MIN_DOCS docs route through block-max
-    WAND pruning (`rank_terms_wand`); everything else takes the
-    exhaustive scorer. Both paths are rank-identical (test_wand.py)."""
+    Flat term queries (WORD / OR-of-distinct-WORDs) on a blocks-mode
+    index of ≥ WAND_MIN_DOCS docs route through block-max WAND pruning
+    (`rank_terms_wand`). Below that, a flat query whose candidate blocks
+    fit the driver fast-path budget (LOCAL_FAST_MAX_OCC occurrences) is
+    decoded and scored on the driver (`score_blocks_local`, no Spark
+    job); everything else takes the exhaustive Spark scorer. Every
+    route is rank-identical (test_wand.py, test_bm25_local.py)."""
     ast = parser.parse(query)
     terms = _flat_word_terms(ast)
     if _wand_eligible(index, terms, force_wand):
         return rank_terms_wand(index, terms, k)
+    meta_fn = getattr(index, "local_block_meta", None)
+    if terms is not None and meta_fn is not None:
+        meta = meta_fn(terms)
+        local = (
+            score_blocks_local(index, terms, meta, np.arange(meta.num_rows))
+            if meta is not None
+            else None
+        )
+        if local is not None:
+            return _local_top_k(index.spark, *local, k)
     return rank_query_exhaustive(index, query, k)
 
 
@@ -399,6 +423,103 @@ def _wand_exact_scores(
     return scored.groupBy("doc_id").agg(F.sum("s").alias("score"))
 
 
+_SCORES_SCHEMA = "doc_id long, score double"
+
+
+def _meta_term_idf(meta, n_docs: int):
+    """(term per block as an object array, term index per block, idf
+    per term) from candidate block metadata. Blocks never split a doc
+    and a term's blocks are doc-disjoint, so Σ n_docs over a term's
+    blocks IS its document frequency."""
+    term_col = np.array(meta.column("term").to_pylist(), dtype=object)
+    uterms, tinv = np.unique(term_col, return_inverse=True)
+    df_t = np.zeros(len(uterms), dtype=np.float64)
+    np.add.at(df_t, tinv, meta.column("n_docs").to_numpy())
+    idf_t = np.log(1.0 + (float(n_docs) - df_t + 0.5) / (df_t + 0.5))
+    return term_col, tinv, idf_t
+
+
+def score_blocks_local(index, terms: list[str], meta, block_idx):
+    """Exact BM25 scores of the chosen candidate blocks, decoded and
+    scored on the driver: (doc_ids, scores) numpy arrays, one entry per
+    matching doc, or None when the Spark scorer must run instead.
+
+    ``meta`` is the candidate blocks' metadata (Index.local_block_meta
+    over ``terms``); ``block_idx`` picks the rows to decode. Same
+    formulas and operation order as _idf_col/_tfn_col: idf from the
+    candidate metadata (_meta_term_idf — ALL of ``meta``, not just the
+    chosen blocks), dl from the handle's doc-length vector; docs
+    without a doc_stats row drop, as in the Spark scorer's inner join.
+
+    None when the chosen blocks hold more than LOCAL_FAST_MAX_OCC
+    occurrences (Σ n_occ from metadata, checked before any payload is
+    read), the layout may split a doc across blocks (no
+    ``block_impacts`` manifest flag), the doc-length vector is not
+    resident (Index.doc_lengths), or the payloads are not readable on
+    the driver."""
+    from fulltextsearch_spark.operators.build import _block_codec
+    from fulltextsearch_spark.sources import index_io
+
+    block_idx = np.asarray(block_idx, dtype=np.int64)
+    if not index.manifest["type"].get("block_impacts"):
+        return None
+    n_occ = meta.column("n_occ").to_numpy()[block_idx]
+    if int(n_occ.sum()) > index_io.LOCAL_FAST_MAX_OCC:
+        return None
+    lengths = index.doc_lengths()
+    if lengths is None:
+        return None
+    n_docs, avgdl = index.collection_stats()
+    term_col, tinv, idf_t = _meta_term_idf(meta, n_docs)
+    payloads = index.local_block_payloads(
+        terms, term_col[block_idx], meta.column("first_doc").to_numpy()[block_idx]
+    )
+    if payloads is None:
+        return None
+    k1, b = BM25_K1, BM25_B
+    # per block: occurrences → (doc, tf) runs; a block's docs are sorted
+    decode_block = _block_codec(index.mode)[1]
+    t_parts = [np.empty(0, dtype=np.int64)]
+    d_parts = [np.empty(0, dtype=np.int64)]
+    tf_parts = [np.empty(0, dtype=np.int64)]
+    for ti, payload in zip(tinv[block_idx], payloads):
+        docs = decode_block(payload)[0]
+        if not len(docs):
+            continue
+        starts = np.flatnonzero(np.r_[True, docs[1:] != docs[:-1]])
+        t_parts.append(np.full(len(starts), ti, dtype=np.int64))
+        d_parts.append(docs[starts])
+        tf_parts.append(np.diff(np.r_[starts, len(docs)]))
+    t, d, tf = (np.concatenate(p) for p in (t_parts, d_parts, tf_parts))
+    ids, dls = lengths
+    pos = np.searchsorted(ids, d)
+    hit = pos < len(ids)
+    hit[hit] = ids[pos[hit]] == d[hit]
+    t, d, pos = t[hit], d[hit], pos[hit]
+    tf, dl = tf[hit].astype(np.float64), dls[pos].astype(np.float64)
+    s = idf_t[t] * ((tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+    doc_ids, inv = np.unique(d, return_inverse=True)
+    return doc_ids, np.bincount(inv, weights=s, minlength=len(doc_ids))
+
+
+def _local_top_k(spark, doc_ids, scores, k: int) -> DataFrame:
+    """Top-k of driver-side scores (score DESC, doc_id ASC) as a local
+    relation: collecting it runs no Spark job."""
+    import pandas as pd
+
+    order = np.lexsort((doc_ids, -scores))[: max(k, 0)]
+    if not len(order):
+        # an empty pandas frame plans as a one-job RDD scan, while a
+        # limit(0) over a one-row local relation folds to an empty one
+        return spark.createDataFrame(
+            pd.DataFrame({"doc_id": [0], "score": [0.0]}), _SCORES_SCHEMA
+        ).limit(0)
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": doc_ids[order], "score": scores[order]}),
+        _SCORES_SCHEMA,
+    )
+
+
 def _rank_wand_driver_cp(
     index,
     terms: list[str],
@@ -416,26 +537,29 @@ def _rank_wand_driver_cp(
     Everything the distributed plane computed as separate metadata
     Spark jobs — per-term ub aggregates, Gate P's θ_cap/floor count,
     the seed-cell ranking, Gate B's survivor count — is numpy over a
-    few thousand rows here, so a WAND-routed query runs exactly TWO
-    Spark jobs (seed decode+score, survivor decode+score) and an
-    exhaustive-routed one runs ONE. Identical routing decisions and
-    identical ranks (same formulas, same gates — test_wand runs this
-    plane; FTS_NO_LOCAL_FAST_PATH or an over-budget term falls back to
-    the distributed plane in rank_terms_wand). Seed/survivor block
-    sets are pushed as broadcast (term, first_doc) key joins — never
-    giant IN literals, no extra jobs."""
-    import numpy as np
+    few thousand rows here. Identical routing decisions and identical
+    ranks (same formulas, same gates — test_wand runs this plane;
+    FTS_NO_LOCAL_FAST_PATH or an over-budget term falls back to the
+    distributed plane in rank_terms_wand).
+
+    Each decode pass — the seed blocks, then the survivors or, on the
+    exhaustive routes, every candidate block — runs on the driver
+    (score_blocks_local) when its blocks fit LOCAL_FAST_MAX_OCC, so a
+    small query runs no Spark job at all. Otherwise the pass is one
+    Spark job (decode+score), its block set pushed as a broadcast
+    (term, first_doc) key join — never giant IN literals. Only where
+    the blocks are decoded moves; routing and block sets do not."""
     import pandas as pd
 
     k1, b = BM25_K1, BM25_B
     nblocks = meta.num_rows
     if nblocks == 0:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    term_col = np.array(meta.column("term").to_pylist(), dtype=object)
+        return _local_top_k(index.spark, np.empty(0), np.empty(0), k)
+    term_col, tinv, idf_t = _meta_term_idf(meta, n_docs)
+    single_term = len(idf_t) == 1
     first = meta.column("first_doc").to_numpy()
     last = meta.column("last_doc").to_numpy()
     max_tf = meta.column("max_tf").to_numpy().astype(np.float64)
-    n_docs_b = meta.column("n_docs").to_numpy().astype(np.int64)
     # per-block exact impact bound (empty/absent frontier -> dl→0 fallback;
     # legacy segments have no imp columns at all)
     fallback = max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
@@ -456,49 +580,58 @@ def _rank_wand_driver_cp(
         tfn_ub = np.where(np.isfinite(seg_max), seg_max, fallback)
     else:
         tfn_ub = fallback
-    # df from block metadata: blocks never split a doc and doc ranges
-    # are disjoint, so Σ n_docs per term IS the document frequency
-    uterms, tinv = np.unique(term_col, return_inverse=True)
-    df_t = np.zeros(len(uterms), dtype=np.float64)
-    np.add.at(df_t, tinv, n_docs_b)
-    idf_t = np.log(1.0 + (float(n_docs) - df_t + 0.5) / (df_t + 0.5))
     ub = idf_t[tinv] * tfn_ub
 
-    dictionary = index.dictionary().where(F.col("term").isin(terms))
-    blocks = index.blocks(exact_terms=terms)
+    driver_decodes = []  # per decode pass: did it run on the driver?
 
-    def exact_scores(bdf) -> DataFrame:
+    def local_scores(block_idx):
+        if block_idx is None:
+            block_idx = np.arange(nblocks)
+        local = score_blocks_local(index, terms, meta, block_idx)
+        driver_decodes.append(local is not None)
+        return local
+
+    def spark_scores(block_idx) -> DataFrame:
+        """Spark decode+score of the chosen blocks (None: all of them)."""
+        blocks = index.blocks(exact_terms=terms)
+        if block_idx is not None:
+            keys = pd.DataFrame(
+                {
+                    "term": term_col[block_idx],
+                    "first_doc": pd.Series(first[block_idx], dtype="int64"),
+                }
+            )
+            blocks = blocks.join(
+                F.broadcast(
+                    index.spark.createDataFrame(
+                        keys, "term string, first_doc long"
+                    )
+                ),
+                ["term", "first_doc"],
+            )
         return _wand_exact_scores(
-            index, dictionary, n_docs, avgdl, bdf,
-            single_term=len(uterms) == 1,
+            index,
+            index.dictionary().where(F.col("term").isin(terms)),
+            n_docs,
+            avgdl,
+            blocks,
+            single_term=single_term,
         )
 
-    def finish(bdf, route: str, n_seeded: int, n_decoded: int) -> DataFrame:
+    def finish(block_idx, route: str, n_seeded: int, n_decoded: int) -> DataFrame:
+        local = local_scores(block_idx)
         if stats is not None:
             stats["n_blocks"] = nblocks
             stats["n_blocks_seeded"] = min(n_seeded, nblocks)
             stats["n_blocks_decoded"] = n_decoded
             stats["route"] = route
+            stats["driver_decode"] = all(driver_decodes)
+        if local is not None:
+            return _local_top_k(index.spark, *local, k)
         return (
-            exact_scores(bdf)
+            spark_scores(block_idx)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
-        )
-
-    def key_join(block_idx) -> DataFrame:
-        keys = pd.DataFrame(
-            {
-                "term": term_col[block_idx],
-                "first_doc": pd.Series(first[block_idx], dtype="int64"),
-            }
-        )
-        return blocks.join(
-            F.broadcast(
-                index.spark.createDataFrame(
-                    keys, "term string, first_doc long"
-                )
-            ),
-            ["term", "first_doc"],
         )
 
     n_seed = max(k, WAND_SEED_BLOCKS)
@@ -507,9 +640,9 @@ def _rank_wand_driver_cp(
     # saving is nblocks − 2·n_seed decodes — worth a second job only
     # when that clears the job's fixed cost (VERDICT r5 #2).
     if gates and nblocks <= 2 * n_seed + WAND_ROUNDTRIP_OVERHEAD_BLOCKS:
-        return finish(blocks, "exhaustive_small", 0, nblocks)
+        return finish(None, "exhaustive_small", 0, nblocks)
     others_ub = None
-    if len(uterms) == 1:
+    if single_term:
         # No single-term Gate P: a term's per-block ubs sit in a ~1%
         # band (bench t0: median/max = 0.99), so no metadata θ estimate
         # can resolve where the true θ lands inside it — 0.8·max
@@ -530,7 +663,7 @@ def _rank_wand_driver_cp(
             np.repeat(c0, cnt) + np.arange(cnt.sum()) - np.repeat(starts, cnt)
         ).astype(np.int64)
         ncells = int(c1.max()) + 1
-        gub = np.zeros((len(uterms), ncells))
+        gub = np.zeros((len(idf_t), ncells))
         np.maximum.at(gub, (tinv[inc_block], inc_cell), ub[inc_block])
         tot = gub.sum(axis=0)
         others_cell = tot[None, :] - gub
@@ -546,7 +679,7 @@ def _rank_wand_driver_cp(
                 or nblocks - n_floor
                 <= n_seed + WAND_ROUNDTRIP_OVERHEAD_BLOCKS
             ):
-                return finish(blocks, "exhaustive_unprunable", 0, nblocks)
+                return finish(None, "exhaustive_unprunable", 0, nblocks)
         nb = np.zeros(ncells, dtype=np.int64)
         np.add.at(nb, inc_cell, 1)
         order = np.argsort(-tot, kind="stable")[:64]
@@ -559,24 +692,27 @@ def _rank_wand_driver_cp(
         pick_mask = np.isin(inc_cell, np.array(picked, dtype=np.int64))
         seed_blocks = np.unique(inc_block[pick_mask])
     seeded_n = len(seed_blocks)
-    seed_scores = (
-        exact_scores(key_join(seed_blocks))
-        .orderBy(F.desc("score"))
-        .limit(k)
-        .collect()
-    )
+    local = local_scores(seed_blocks)
+    if local is not None:
+        seed_scores = np.sort(local[1])[::-1][:k]
+    else:
+        seed_scores = [
+            r["score"]
+            for r in spark_scores(seed_blocks)
+            .orderBy(F.desc("score"))
+            .limit(k)
+            .collect()
+        ]
     if len(seed_scores) < k:
-        return finish(blocks, "exhaustive_underfull", seeded_n, nblocks)
-    theta = seed_scores[-1]["score"]
+        return finish(None, "exhaustive_underfull", seeded_n, nblocks)
+    theta = seed_scores[-1]
     surv_mask = (
         ub >= theta if others_ub is None else ub + others_ub >= theta
     )
     n_surv = int(surv_mask.sum())
     if gates and n_surv > WAND_MAX_SURVIVOR_FRAC * nblocks:
-        return finish(blocks, "exhaustive_post_theta", seeded_n, nblocks)
-    return finish(
-        key_join(np.nonzero(surv_mask)[0]), "wand", seeded_n, n_surv
-    )
+        return finish(None, "exhaustive_post_theta", seeded_n, nblocks)
+    return finish(np.nonzero(surv_mask)[0], "wand", seeded_n, n_surv)
 
 
 def rank_terms_wand(
@@ -646,7 +782,9 @@ def rank_terms_wand(
     "n_blocks_seeded": DISTINCT blocks decoded by the seed phase,
     "n_blocks_decoded": blocks decoded by the final pass, "route": which
     gate routed ("wand" | "exhaustive_small" | "exhaustive_unprunable" |
-    "exhaustive_underfull" | "exhaustive_post_theta")} for prune-ratio
+    "exhaustive_underfull" | "exhaustive_post_theta"), "driver_decode":
+    whether every payload decode of the call ran on the driver
+    (score_blocks_local) rather than in Spark} for prune-ratio
     reporting off the persisted candidate-block cache.
 
     Scale shape: the residual side (per-(cell, term) maxima) is block
@@ -722,6 +860,7 @@ def rank_terms_wand(
                 stats["n_blocks_seeded"] = min(n_seeded, n_total)
                 stats["n_blocks_decoded"] = n_decoded
                 stats["route"] = route
+                stats["driver_decode"] = False
             return (
                 exact_scores(bdf)
                 .orderBy(F.desc("score"), F.asc("doc_id"))

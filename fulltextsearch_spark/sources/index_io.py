@@ -92,6 +92,14 @@ LOCAL_FAST_MAX_OCC = 1 << 16
 # and keeps its control plane distributed.
 LOCAL_META_MAX_BLOCKS = 1 << 20
 
+# Entries per memo dict on an Index handle (block metadata, doc ids,
+# doc windows, fast-path verdicts, pyarrow datasets, decoded frames):
+# one entry per distinct term set, so a long-lived handle serving an
+# open-ended query stream would otherwise grow without bound. Oldest
+# entry out first.
+LOCAL_CACHE_ENTRIES = 64
+_MISS = object()  # memo lookup sentinel: None is a cacheable verdict
+
 
 def _local_fast_enabled() -> bool:
     return not os.environ.get("FTS_NO_LOCAL_FAST_PATH")
@@ -842,8 +850,19 @@ class Index:
     _doc_stats_cache: DataFrame | None = field(repr=False, default=None)
     _collection_stats: tuple[int, float] | None = field(repr=False, default=None)
     _table_cache: dict = field(repr=False, default_factory=dict)
+    # driver-side memo dicts, each bounded to LOCAL_CACHE_ENTRIES
+    # (_cache_put); segments are immutable, so entries never go stale
+    _range_cache: dict = field(repr=False, default_factory=dict)
+    _blockmeta_cache: dict = field(repr=False, default_factory=dict)
+    _docids_cache: dict = field(repr=False, default_factory=dict)
+    _local_ds_cache: dict = field(repr=False, default_factory=dict)
+    _local_occ_cache: dict = field(repr=False, default_factory=dict)
+    _local_pdf_cache: dict = field(repr=False, default_factory=dict)
+    # (sorted doc_id, dl) int64 arrays of every committed doc, False
+    # when over budget or not driver-listable; None until first asked
+    _doc_lengths: object = field(repr=False, default=None)
     # guards the per-handle driver caches touched by concurrent rank
-    # queries sharing one handle (pdf/meta memoization + eviction)
+    # queries sharing one handle (memoization + eviction)
     _cache_lock: object = field(repr=False, default_factory=threading.Lock)
 
     @classmethod
@@ -939,12 +958,73 @@ class Index:
         return self._union("doc_positions")  # legacy layout
 
     def collection_stats(self) -> tuple[int, float]:
+        """(N, avgdl) over the committed docs. From the driver-resident
+        doc-length vector when it fits (zero Spark jobs): the exact
+        integer Σdl over the count is bit-identical to Spark's double
+        ``avg`` over the long ``dl`` column, whose partial sums are
+        exact below 2^53. Otherwise one aggregate over ``doc_stats``."""
         if self._collection_stats is None:
-            r = self.doc_stats().agg(
-                F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-            ).collect()[0]
-            self._collection_stats = (int(r["n"]), float(r["avgdl"] or 0.0))
+            lengths = self.doc_lengths()
+            if lengths is not None:
+                n, total = len(lengths[1]), int(lengths[1].sum())
+                self._collection_stats = (n, total / n if n else 0.0)
+            else:
+                r = self.doc_stats().agg(
+                    F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+                ).collect()[0]
+                self._collection_stats = (
+                    int(r["n"]), float(r["avgdl"] or 0.0)
+                )
         return self._collection_stats
+
+    def doc_lengths(self):
+        """(doc_ids, dl): int64 numpy arrays over every committed doc,
+        sorted by doc id — read once per handle from the segments'
+        ``doc_stats`` files with pyarrow, on the driver. None when the
+        fast path is disabled, the files are not driver-listable, or
+        the committed doc count (Σ manifest n_docs) exceeds
+        LOCAL_META_MAX_BLOCKS (16 MB of arrays at the cap)."""
+        if not _local_fast_enabled():
+            return None
+        with self._cache_lock:
+            if self._doc_lengths is None:
+                self._doc_lengths = self._read_doc_lengths() or False
+        return self._doc_lengths or None
+
+    def _read_doc_lengths(self):
+        import numpy as np
+        import pyarrow.dataset as pads
+
+        n_docs = sum(
+            s["n_docs"] for s in self.manifest["segments"] if s["committed"]
+        )
+        paths = self._seg_paths("doc_stats")
+        if n_docs > LOCAL_META_MAX_BLOCKS or not all(
+            os.path.isdir(p) for p in paths
+        ):
+            return None
+        ids, dls = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+        for p in paths:
+            tbl = pads.dataset(p, format="parquet").to_table(
+                columns=["doc_id", "dl"]
+            )
+            ids.append(tbl.column("doc_id").to_numpy().astype(np.int64))
+            dls.append(tbl.column("dl").to_numpy().astype(np.int64))
+        ids, dls = np.concatenate(ids), np.concatenate(dls)
+        order = np.argsort(ids, kind="stable")
+        return ids[order], dls[order]
+
+    def _cache_put(self, cache: dict, key, value):
+        """Memoize ``value`` under ``key`` in one of the handle's memo
+        dicts, evicting the oldest entry at LOCAL_CACHE_ENTRIES. Under
+        the lock: concurrent queries share a handle, and an unguarded
+        pop(next(iter(...))) races a concurrent insert (double-pop
+        KeyError / resize during iteration)."""
+        with self._cache_lock:
+            if key not in cache and len(cache) >= LOCAL_CACHE_ENTRIES:
+                cache.pop(next(iter(cache)), None)
+            cache[key] = value
+        return value
 
     def postings(
         self,
@@ -1050,12 +1130,10 @@ class Index:
         windows cover everything prunes nothing anyway)."""
         if self.mode not in BLOCK_MODES or not _local_fast_enabled():
             return None
-        cache = getattr(self, "_range_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_range_cache", cache)
-        if term in cache:
-            return cache[term]
+        cache = self._range_cache
+        hit = cache.get(term, _MISS)
+        if hit is not _MISS:
+            return hit
         try:
             import pyarrow.dataset as pads
         except Exception:  # pragma: no cover - pyarrow is a hard dep
@@ -1091,8 +1169,7 @@ class Index:
                 if len(merged) <= max_ranges
                 else None
             )
-        cache[term] = result
-        return result
+        return self._cache_put(cache, term, result)
 
     def blocks(self, exact_terms: list[str] | None = None) -> DataFrame:
         """Raw block rows (blocks mode) for block-max pruning paths."""
@@ -1124,10 +1201,7 @@ class Index:
         so even a 250k-doc hot term is a few thousand rows."""
         if self.mode not in BLOCK_MODES or not _local_fast_enabled():
             return None
-        cache = getattr(self, "_blockmeta_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_blockmeta_cache", cache)
+        cache = self._blockmeta_cache
         # one cache entry per term set, ALWAYS including the impact
         # columns: a ranked AND otherwise scanned the same parquet
         # footers twice on the GIL-bound driver — once with impacts for
@@ -1136,8 +1210,8 @@ class Index:
         # noise next to a second footer+metadata pass.
         del with_impacts  # kept in the signature for call-site clarity
         key = tuple(sorted(set(terms)))
-        if key in cache:
-            tbl = cache[key]
+        tbl = cache.get(key)
+        if tbl is not None:
             return None if tbl is False else tbl
         try:
             import pyarrow as pa
@@ -1159,12 +1233,48 @@ class Index:
                 continue
             total += rb.num_rows
             if total > LOCAL_META_MAX_BLOCKS:
-                cache[key] = False
+                self._cache_put(cache, key, False)
                 return None
             batches.append(rb)
         tbl = pa.Table.from_batches(batches, schema=scanner.projected_schema)
-        cache[key] = tbl
-        return tbl
+        return self._cache_put(cache, key, tbl)
+
+    def local_block_payloads(
+        self, terms: list[str], block_terms, block_first_docs
+    ) -> list[bytes] | None:
+        """Driver-side payload read of the blocks keyed (block_terms[i],
+        block_first_docs[i]) — (term, first_doc) is a unique block key —
+        aligned with the keys. ``terms`` is the query's term set, so the
+        scan reuses the pyarrow dataset (and its parsed footers) that
+        local_block_meta opened. None when the block files are not
+        driver-listable or a key is missing from them (the caller then
+        decodes through Spark). Callers budget the read from metadata
+        first (Σ n_occ of the keyed blocks)."""
+        import pyarrow.dataset as pads
+
+        dataset = self._local_dataset(terms)
+        if dataset is None:
+            return None
+        keys = list(zip(block_terms, (int(f) for f in block_first_docs)))
+        if not keys:
+            return []
+        flt = pads.field("term").isin(sorted({t for t, _ in keys}))
+        flt &= pads.field("first_doc").isin(sorted({f for _, f in keys}))
+        tbl = dataset.to_table(
+            columns=["term", "first_doc", "payload"], filter=flt
+        )
+        found = dict(
+            zip(
+                zip(
+                    tbl.column("term").to_pylist(),
+                    tbl.column("first_doc").to_pylist(),
+                ),
+                tbl.column("payload").to_pylist(),
+            )
+        )
+        if not all(k in found for k in keys):
+            return None
+        return [found[k] for k in keys]
 
     def term_doc_ids(self, term: str):
         """Sorted int64 numpy array of one term's doc ids — driver-
@@ -1173,12 +1283,10 @@ class Index:
         Memoized per handle. The doc-granularity rare-leg prune reads
         this: a rare term's ids ARE what the reference's leapfrog seeks
         the long posting list to (PhraseQuery.cs:21-73)."""
-        cache = getattr(self, "_docids_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_docids_cache", cache)
-        if term in cache:
-            return cache[term]
+        cache = self._docids_cache
+        hit = cache.get(term, _MISS)
+        if hit is not _MISS:
+            return hit
         import numpy as np
 
         pdf = (
@@ -1191,8 +1299,7 @@ class Index:
             if pdf is None
             else np.unique(pdf["doc_id"].to_numpy(dtype="int64"))
         )
-        cache[term] = result
-        return result
+        return self._cache_put(cache, term, result)
 
     def block_keys_for_docs(
         self, term: str, doc_ids, max_keys: int = 4096,
@@ -1262,14 +1369,13 @@ class Index:
             return None
         import pyarrow.dataset as pads
 
-        cache = getattr(self, "_local_ds_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_local_ds_cache", cache)
         key = tuple(files)
-        if key not in cache:
-            cache[key] = pads.dataset(files, format="parquet")
-        return cache[key]
+        dataset = self._local_ds_cache.get(key)
+        if dataset is None:
+            dataset = self._cache_put(
+                self._local_ds_cache, key, pads.dataset(files, format="parquet")
+            )
+        return dataset
 
     def _local_postings_pdf(
         self,
@@ -1298,14 +1404,8 @@ class Index:
             import pyarrow.dataset as pads
         except Exception:  # pragma: no cover - pyarrow is a hard dep
             return None
-        cache = getattr(self, "_local_occ_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_local_occ_cache", cache)
-        pdf_cache = getattr(self, "_local_pdf_cache", None)
-        if pdf_cache is None:
-            pdf_cache = {}
-            setattr(self, "_local_pdf_cache", pdf_cache)
+        cache = self._local_occ_cache
+        pdf_cache = self._local_pdf_cache
         pdf_key = (
             tuple(sorted(set(terms))),
             min_doc,
@@ -1314,22 +1414,11 @@ class Index:
             if block_first_docs is not None
             else None,
         )
-        if pdf_key in pdf_cache:
-            return pdf_cache[pdf_key]
+        pdf = pdf_cache.get(pdf_key)
+        if pdf is not None:
+            return pdf
         import numpy as np
         import pandas as pd
-
-        def memo(pdf):
-            # lock: 16 concurrent rank queries share a handle; an
-            # unguarded pop(next(iter(...))) raced a concurrent insert
-            # (double-pop KeyError / resize-during-iteration — ADVICE r5)
-            with self._cache_lock:
-                if len(pdf_cache) >= 64:  # bounded: drop the oldest entry
-                    oldest = next(iter(pdf_cache), None)
-                    if oldest is not None:
-                        pdf_cache.pop(oldest, None)
-                pdf_cache[pdf_key] = pdf
-            return pdf
 
         key = tuple(sorted(set(terms)))
         if cache.get(key) is False:  # known too hot for the fast path
@@ -1354,10 +1443,10 @@ class Index:
                 continue
             total += int(np.sum(rb.column(1).to_numpy(zero_copy_only=False)))
             if total > LOCAL_FAST_MAX_OCC:
-                cache[key] = False
+                self._cache_put(cache, key, False)
                 return None
             batches.append(rb)
-        cache[key] = True
+        self._cache_put(cache, key, True)
         decode_block = B._block_codec(self.mode)[1]
         bfd_set = (
             {int(x) for x in block_first_docs}
@@ -1401,7 +1490,9 @@ class Index:
                 out_field.append(int(fields[s]))
                 out_pos.append(pos[s:e].astype(np.int32).tolist())
                 out_tf.append(int(e - s))
-        return memo(
+        return self._cache_put(
+            pdf_cache,
+            pdf_key,
             pd.DataFrame(
                 {
                     "term": out_term,

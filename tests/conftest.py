@@ -35,3 +35,25 @@ def pms_index_roots(spark, tmp_path_factory):
             )
         roots[mode] = root
     return roots
+
+
+@pytest.fixture(scope="session")
+def synth_blocks_idx(spark, tmp_path_factory):
+    """400-doc synthetic Zipf corpus (pages.synth_pages), blocks mode:
+    doc i has id i + 1 and text pages.synth_doc(i)."""
+    from fulltextsearch_spark.sources.index_io import Index, build_index
+    from fulltextsearch_spark.sources.pages import synth_pages
+
+    root = str(tmp_path_factory.mktemp("wand_idx"))
+    build_index(spark, synth_pages(spark, 400), root, mode="blocks")
+    return Index.open(spark, root)
+
+
+@pytest.fixture(params=["fast", "spark"])
+def fast_path(request, monkeypatch):
+    """Run a test with the driver-side fast path on ("fast") and off
+    ("spark": FTS_NO_LOCAL_FAST_PATH=1, so every ranked decode runs in
+    Spark). Handles must be opened inside the test."""
+    if request.param == "spark":
+        monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
+    return request.param

@@ -125,3 +125,32 @@ def test_wild_query_job_budget(spark, idx):
         spark, "budget-wild-2", lambda: idx.search("WILD(te*)").limit(100).collect()
     )
     assert again <= 2, again  # expansion memoized
+
+
+def test_small_ranked_queries_run_no_spark_job(spark, synth_blocks_idx):
+    """Flat ranked queries whose candidate blocks fit LOCAL_FAST_MAX_OCC
+    are decoded and scored on the driver (score_blocks_local) and
+    collected from a local relation: zero Spark jobs, even on a fresh
+    handle (N and avgdl come from the driver doc-length vector) — for
+    Index.rank below WAND_MIN_DOCS and for both WAND decode passes."""
+    from fulltextsearch_spark.operators.bm25 import rank_terms_wand
+
+    idx = Index.open(spark, synth_blocks_idx.root)
+    word = _jobs_for(
+        spark, "rank-word", lambda: idx.rank("WORD(t17)", 5).collect()
+    )
+    assert word == 0, word
+    stats: dict = {}
+    wand = _jobs_for(
+        spark,
+        "rank-wand",
+        lambda: rank_terms_wand(
+            idx, ["t0", "t500"], 5, stats=stats, gates=False
+        ).collect(),
+    )
+    assert wand == 0, wand
+    assert stats["route"] == "wand" and stats["driver_decode"], stats
+    absent = _jobs_for(
+        spark, "rank-absent", lambda: idx.rank("WORD(nosuchterm)", 5).collect()
+    )
+    assert absent == 0, absent

@@ -8,14 +8,6 @@ from fulltextsearch_spark.operators.bm25 import (
     rank_terms_wand,
 )
 from fulltextsearch_spark.sources.index_io import Index, build_index
-from fulltextsearch_spark.sources.pages import synth_pages
-
-
-@pytest.fixture(scope="module")
-def synth_blocks_idx(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("wand_idx"))
-    build_index(spark, synth_pages(spark, 400), root, mode="blocks")
-    return Index.open(spark, root)
 
 
 @pytest.mark.parametrize(
@@ -29,8 +21,12 @@ def synth_blocks_idx(spark, tmp_path_factory):
         (["nosuchterm"], 5),
     ],
 )
-def test_wand_rank_identical_to_exhaustive(spark, synth_blocks_idx, terms, k):
-    idx = synth_blocks_idx
+def test_wand_rank_identical_to_exhaustive(
+    spark, synth_blocks_idx, fast_path, terms, k
+):
+    """Both WAND decode passes on the driver ("fast") and in Spark
+    ("spark"); the exhaustive reference always scores in Spark."""
+    idx = Index.open(spark, synth_blocks_idx.root)
     query = (
         f"WORD({terms[0]})"
         if len(terms) == 1
@@ -125,39 +121,49 @@ def test_wand_distributed_plane_matches_driver_plane(
 ):
     """rank_terms_wand has two control planes — driver-resident numpy
     over local block metadata (the interactive default) and the
-    distributed Spark plane (over-budget terms / no local files). Both
-    must make the same routing decisions and return identical ranks."""
-    idx = synth_blocks_idx
-    cases = [(["t0"], 5), (["t3", "t11"], 10)]
-    driver = []
-    for terms, k in cases:
-        st: dict = {}
-        driver.append(
-            (
-                [
-                    (r["doc_id"], round(r["score"], 9))
-                    for r in rank_terms_wand(
-                        idx, terms, k, stats=st, gates=False
-                    ).collect()
-                ],
-                st["route"],
-                st["n_blocks"],
-            )
-        )
+    distributed Spark plane (over-budget terms / no local files) — and
+    the driver plane decodes each pass on the driver (score_blocks_local)
+    when its blocks fit LOCAL_FAST_MAX_OCC, else in Spark. All three
+    must make the same routing decisions, decode the same blocks and
+    return identical ranks; only the ``driver_decode`` stat differs."""
+    from fulltextsearch_spark.sources import index_io
+
+    cases = [(["t0"], 5), (["t3", "t11"], 10), (["t0", "t500"], 5)]
+
+    def run(idx):
+        out = []
+        for terms, k in cases:
+            st: dict = {}
+            rows = [
+                (r["doc_id"], round(r["score"], 9))
+                for r in rank_terms_wand(
+                    idx, terms, k, stats=st, gates=False
+                ).collect()
+            ]
+            out.append((rows, st))
+        return out
+
+    def contract(st):
+        keys = ("route", "n_blocks", "n_blocks_seeded", "n_blocks_decoded")
+        return {key: st[key] for key in keys}
+
+    kernel = run(Index.open(spark, synth_blocks_idx.root))
+    assert all(st["driver_decode"] for _, st in kernel)
+    assert {st["route"] for _, st in kernel} == {"wand"}
+    # driver control plane, decode passes over budget -> Spark scorer
+    monkeypatch.setattr(index_io, "LOCAL_FAST_MAX_OCC", 0)
+    spark_decode = run(Index.open(spark, synth_blocks_idx.root))
+    monkeypatch.undo()
     monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
-    idx_off = Index.open(spark, idx.root)
+    idx_off = Index.open(spark, synth_blocks_idx.root)
     assert idx_off.local_block_meta(["t0"]) is None  # plane disabled
-    for (terms, k), (rows, route, n_blocks) in zip(cases, driver):
-        st: dict = {}
-        dist = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in rank_terms_wand(
-                idx_off, terms, k, stats=st, gates=False
-            ).collect()
-        ]
-        assert dist == rows
-        assert st["route"] == route
-        assert st["n_blocks"] == n_blocks
+    distributed = run(idx_off)
+    for (rows, st), (rows_s, st_s), (rows_d, st_d) in zip(
+        kernel, spark_decode, distributed
+    ):
+        assert rows == rows_s == rows_d
+        assert contract(st) == contract(st_s) == contract(st_d)
+        assert not st_s["driver_decode"] and not st_d["driver_decode"]
 
 
 def test_wand_gate_small_candidate_set(spark, synth_blocks_idx):
